@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import similarity as sim
+from .checkpoint import write_json
 
 _FMT_VERSION = 1
 
@@ -92,22 +93,15 @@ def write_ivfpq(
         os.path.join(out_dir, "codes")
     )
     for name, arr in (("centroids", centroids), ("codebooks", codebooks)):
-        tmp = os.path.join(out_dir, f"{name}.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(arr.tolist(), f)
-        os.replace(tmp, os.path.join(out_dir, f"{name}.json"))
-    man = {
+        write_json(os.path.join(out_dir, f"{name}.json"), arr.tolist())
+    write_json(mpath, {
         "format_version": _FMT_VERSION,
         "dim": int(centroids.shape[1]),
         "n_centroids": int(centroids.shape[0]),
         "m": int(codebooks.shape[0]),
         "k": int(codebooks.shape[1]),
         "score_round": score_round,
-    }
-    tmp = os.path.join(out_dir, "manifest.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(man, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(out_dir, "manifest.json"))
+    })
 
 
 def load_ivfpq(out_dir: str):
@@ -235,9 +229,7 @@ def compact_ann_codes(spark: SparkSession, out_dir: str) -> None:
     shutil.rmtree(os.path.join(out_dir, "codes"))
     os.rename(tmp, os.path.join(out_dir, "codes"))
     shutil.rmtree(seg_root)
-    with open(mpath + ".tmp", "w") as f:
-        json.dump(man, f, indent=1, sort_keys=True)
-    os.replace(mpath + ".tmp", mpath)
+    write_json(mpath, man)
 
 
 def query_ivfpq(

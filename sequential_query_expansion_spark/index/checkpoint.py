@@ -15,8 +15,17 @@ Layout under ``out_dir``:
     postings_flat/               — parquet partitioned by bucket=NN
     postings/                    — blocked+compressed, partitioned by bucket=NN
     manifest.json                — stages done + buckets done (postings)
-    build_metrics/               — lineage: one row per (stage, partition)
-                                   with rows, wall_ms, status, ts
+    build_metrics/               — lineage: one row per (stage, table,
+                                   partition) with rows, wall_ms, ts
+
+Every table reaches disk through ``publish``: a Spark write into
+``<table>.compact.tmp``, then a driver-side swap. Lineage is read from
+the footers of the files just written, so it costs no Spark job: a row's
+``partition_id`` is the ``bucket=NN`` value of a term-bucketed table,
+else the write task's part number; ``rows`` is that partition's row
+count (zero-row files give no row); ``wall_ms`` is the wall time of the
+whole write; ``ts`` is when the row was logged. Each logging call adds
+one uniquely named parquet file.
 
 Resume: a stage listed in the manifest is loaded, not rebuilt; for the
 blocked-postings stage only the MISSING buckets are encoded and appended
@@ -33,8 +42,11 @@ import os
 import shutil
 import threading
 import time
+import uuid
 from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,8 +56,22 @@ from .build import (
     build_index_from_docs,
 )
 from .codec import BLOCK_FORMAT
+from .xxh64 import term_bucket_col
 
 NUM_BUCKETS = 64
+STAGED = ".compact.tmp"
+_LINEAGE = pa.schema([
+    ("stage", pa.string()), ("table", pa.string()),
+    ("partition_id", pa.int32()), ("rows", pa.int64()),
+    ("wall_ms", pa.float64()), ("ts", pa.float64()),
+])
+
+
+def write_json(path: str, obj) -> None:
+    """Atomic JSON write: a reader sees the old file or the new one."""
+    with open(path + ".tmp", "w") as f:
+        json.dump(obj, f, sort_keys=True)
+    os.replace(path + ".tmp", path)
 
 
 def _manifest_path(out_dir: str) -> str:
@@ -60,29 +86,89 @@ def _load_manifest(out_dir: str) -> dict:
     return {"stages": [], "buckets_done": []}
 
 
-def _save_manifest(out_dir: str, man: dict) -> None:
-    tmp = _manifest_path(out_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(man, f, indent=1, sort_keys=True)
-    os.replace(tmp, _manifest_path(out_dir))
+def _footer_rows(root: str, wall_ms: float) -> list:
+    """(table, partition_id, rows, wall_ms) per partition of the parquet
+    files under ``root``, counted from their footers alone."""
+    per: dict = {}
+    for d, _, files in os.walk(root):
+        part = os.path.basename(d)
+        for fn in files:
+            if fn.startswith(("_", ".")) or not fn.endswith(".parquet"):
+                continue
+            n = pq.read_metadata(os.path.join(d, fn)).num_rows
+            if n:
+                # part-00003-<uuid>-c000.snappy.parquet -> task 3
+                pid = (int(part.split("=", 1)[1]) if part.startswith("bucket=")
+                       else int(fn.split("-")[1]))
+                per[pid] = per.get(pid, 0) + n
+    table = os.path.basename(root).removesuffix(STAGED)
+    return [(table, pid, n, wall_ms) for pid, n in sorted(per.items())]
 
 
-def _append_metrics(spark: SparkSession, out_dir: str, stage: str,
-                    df_metrics: DataFrame) -> None:
-    (
-        df_metrics.withColumn("stage", F.lit(stage))
-        .withColumn("ts", F.lit(time.time()))
-        .write.mode("append")
-        .parquet(os.path.join(out_dir, "build_metrics"))
-    )
+def _stage(df: DataFrame, path: str, partition_by: str | None) -> list:
+    """Write ``df`` to ``<path>.compact.tmp``; return its lineage."""
+    t0 = time.perf_counter()
+    w = df.write.mode("overwrite")
+    if partition_by:
+        w = w.partitionBy(partition_by)
+    w.parquet(path + STAGED)
+    return _footer_rows(path + STAGED, (time.perf_counter() - t0) * 1000)
 
 
-def _partition_metrics(df: DataFrame) -> DataFrame:
-    """(partition_id, rows) for lineage — computed in the same pass shape
-    the write uses (no extra shuffle: spark_partition_id is free)."""
-    return df.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-        F.count("*").alias("rows")
-    )
+def _swap(path: str) -> None:
+    if os.path.isdir(path):
+        shutil.rmtree(path)
+    os.replace(path + STAGED, path)
+
+
+def publish(df: DataFrame, path: str, partition_by: str | None = None) -> list:
+    """Write ``df`` as the parquet table at ``path`` via a staged copy
+    that is swapped in once complete. Returns one lineage row
+    (table, partition_id, rows, wall_ms) per written partition. A crash
+    inside the swap leaves the table missing beside its staged copy,
+    which ``restore_staged`` moves in."""
+    lineage = _stage(df, path, partition_by)
+    _swap(path)
+    return lineage
+
+
+def restore_staged(out_dir: str) -> None:
+    """Finish the swap of any table or ``bucket=NN`` dir that a crash
+    left missing beside its complete staged copy. Complete means
+    Spark's job-commit marker ``_SUCCESS`` is present: a write that died
+    mid-job is never moved in."""
+    for name in os.listdir(out_dir):
+        staged = os.path.join(out_dir, name)
+        if not name.endswith(STAGED) or not os.path.exists(
+            os.path.join(staged, "_SUCCESS")
+        ):
+            continue
+        dst = staged.removesuffix(STAGED)
+        if not os.path.isdir(dst):
+            os.replace(staged, dst)
+            continue
+        for part in os.listdir(staged):
+            if part.startswith("bucket=") and not os.path.isdir(
+                os.path.join(dst, part)
+            ):
+                os.replace(os.path.join(staged, part), os.path.join(dst, part))
+
+
+def log_lineage(out_dir: str, stage: str, lineage: list) -> None:
+    """Append ``lineage`` rows of ``stage`` to ``build_metrics/`` as one
+    new, uniquely named parquet file (driver-side, no Spark job)."""
+    if not lineage:
+        return
+    d = os.path.join(out_dir, "build_metrics")
+    os.makedirs(d, exist_ok=True)
+    table, pid, rows, wall_ms = map(list, zip(*lineage))
+    t = pa.Table.from_pydict({
+        "stage": [stage] * len(rows), "table": table, "partition_id": pid,
+        "rows": rows, "wall_ms": wall_ms, "ts": [time.time()] * len(rows),
+    }, schema=_LINEAGE)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    pq.write_table(t, os.path.join(d, "." + name))   # hidden until whole
+    os.replace(os.path.join(d, "." + name), os.path.join(d, name))
 
 
 def build_index_checkpointed(
@@ -113,76 +199,61 @@ def build_index_checkpointed(
     os.makedirs(out_dir, exist_ok=True)
     man = _load_manifest(out_dir)
     # The four post-`flat` stages run CONCURRENTLY on threads (they are
-    # mutually independent Spark jobs); manifest + metrics mutations are
-    # serialized behind this lock so resume bookkeeping stays atomic and
-    # the append-mode metrics writes never share a _temporary dir.
+    # mutually independent Spark jobs); manifest mutations are
+    # serialized behind this lock so resume bookkeeping stays atomic.
     man_lock = threading.Lock()
+
+    def path(name: str) -> str:
+        return os.path.join(out_dir, name)
 
     def stage_done(name: str) -> bool:
         with man_lock:
             return name in man["stages"]
 
-    def mark_stage(name: str) -> None:
+    def mark_stage(name: str, lineage: list) -> None:
+        log_lineage(out_dir, name, lineage)
         with man_lock:
             if name not in man["stages"]:
                 man["stages"].append(name)
-                _save_manifest(out_dir, man)
-
-    def append_metrics(stage: str, df_metrics: DataFrame) -> None:
-        with man_lock:
-            _append_metrics(spark, out_dir, stage, df_metrics)
-
-    flat_path = os.path.join(out_dir, "postings_flat")
+                write_json(_manifest_path(out_dir), man)
 
     if not stage_done("flat"):
         t0 = time.perf_counter()
         idx = build_index_from_docs(docs)
-        flat_b = idx.postings_flat.withColumn(
-            "bucket", F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int")
+        lineage = publish(
+            idx.postings_flat.withColumn("bucket", term_bucket_col(num_buckets)),
+            path("postings_flat"), "bucket",
         )
-        flat_b.write.mode("overwrite").partitionBy("bucket").parquet(flat_path)
         # publish docmap sorted by doc_id: the serving tier's reverse
         # lookup (LocalSearcher.urls_for) filters on doc_id, and sorted
         # row-groups let parquet min/max stats prune the scan
-        idx.docmap.sort("doc_id").write.mode("overwrite").parquet(
-            os.path.join(out_dir, "docmap")
-        )
+        lineage += publish(idx.docmap.sort("doc_id"), path("docmap"))
         # doc_len sorted too: the serving tier's live-mode init fetches
         # the tombstoned ids' dls through the same row-group pruning
-        idx.doc_len.sort("doc_id").write.mode("overwrite").parquet(
-            os.path.join(out_dir, "doc_len")
-        )
-        idx.vocab.write.mode("overwrite").parquet(os.path.join(out_dir, "vocab"))
-        with open(os.path.join(out_dir, "stats.json"), "w") as f:
-            json.dump(
-                {
-                    "n_docs": idx.n_docs,
-                    "avgdl": idx.avgdl,
-                    "salt_ranges": salt_ranges,
-                    "num_buckets": num_buckets,
-                    "block_format": BLOCK_FORMAT,
-                    "build_wall_s": time.perf_counter() - t0,
-                },
-                f,
-            )
-        _append_metrics(
-            spark, out_dir, "flat",
-            _partition_metrics(spark.read.parquet(flat_path)),
-        )
-        mark_stage("flat")
+        lineage += publish(idx.doc_len.sort("doc_id"), path("doc_len"))
+        lineage += publish(idx.vocab, path("vocab"))
+        write_json(path("stats.json"), {
+            "n_docs": idx.n_docs,
+            "avgdl": idx.avgdl,
+            "salt_ranges": salt_ranges,
+            "num_buckets": num_buckets,
+            "block_format": BLOCK_FORMAT,
+            "build_wall_s": time.perf_counter() - t0,
+        })
+        mark_stage("flat", lineage)
 
-    with open(os.path.join(out_dir, "stats.json")) as f:
+    with open(path("stats.json")) as f:
         stats = json.load(f)
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
 
-    flat = spark.read.parquet(flat_path)
-    postings_path = os.path.join(out_dir, "postings")
+    flat = spark.read.parquet(path("postings_flat"))
+    postings_path = path("postings")
 
     def _stage_blocked() -> None:
-        all_buckets = set(range(num_buckets))
         with man_lock:
             done = set(man["buckets_done"])
-        todo = sorted(all_buckets - done)
+        todo = sorted(set(range(num_buckets)) - done)
+        lineage = []
         if todo:
             # Crash window: a previous run may have committed bucket=NN
             # dirs on disk but died before recording them in the manifest.
@@ -203,48 +274,34 @@ def build_index_checkpointed(
             blocked.write.mode("append").partitionBy("bucket").parquet(
                 postings_path
             )
-            wall_ms = (time.perf_counter() - t0) * 1000
-            written = spark.read.parquet(postings_path).filter(
-                F.col("bucket").isin(todo)
-            )
-            append_metrics(
-                "blocked",
-                written.groupBy(F.col("bucket").alias("partition_id")).agg(
-                    F.count("*").alias("rows")
-                ).withColumn("wall_ms_total", F.lit(wall_ms)),
-            )
+            lineage = [
+                r for r in _footer_rows(
+                    postings_path, (time.perf_counter() - t0) * 1000
+                ) if r[1] in todo
+            ]
             with man_lock:
                 man["buckets_done"] = sorted(
                     set(man["buckets_done"]) | set(todo)
                 )
-                _save_manifest(out_dir, man)
-        mark_stage("blocked")
+                write_json(_manifest_path(out_dir), man)
+        mark_stage("blocked", lineage)
 
     def _stage_doc_vectors() -> None:
         # forward index, ONE global doc_id sort so the serving tier's
         # fb-doc fetch prunes row groups (same publish-time-sort policy
         # as the docmap); range-partitioned on doc_id by the sort, so at
         # cluster scale each output file covers a contiguous doc span
-        dv_path = os.path.join(out_dir, "doc_vectors")
-        flat.drop("bucket").select("doc_id", "term", "tf", "dl").sort(
-            "doc_id", "term"
-        ).write.mode("overwrite").parquet(dv_path)
-        append_metrics(
-            "doc_vectors", _partition_metrics(spark.read.parquet(dv_path))
-        )
-        mark_stage("doc_vectors")
+        mark_stage("doc_vectors", publish(
+            flat.select("doc_id", "term", "tf", "dl").sort("doc_id", "term"),
+            path("doc_vectors"),
+        ))
 
     def _stage_docs() -> None:
         # stored document table — Indri's CompressedCollection (parquet
         # columns are already compressed), backing `dumpindex dt/dd/dcsv`
         # (occuranceCount.cpp:516-523, :551-593, :595-630). Sorted by
         # doc_id so point fetches prune row groups, same policy as docmap.
-        docs_path = os.path.join(out_dir, "docs")
-        docs.sort("doc_id").write.mode("overwrite").parquet(docs_path)
-        append_metrics(
-            "docs", _partition_metrics(spark.read.parquet(docs_path))
-        )
-        mark_stage("docs")
+        mark_stage("docs", publish(docs.sort("doc_id"), path("docs")))
 
     def _stage_positional() -> None:
         from ..functions.text import tokenize_col
@@ -254,14 +311,10 @@ def build_index_checkpointed(
             "doc_id", tokenize_col(F.col("text")).alias("tokens")
         )
         pos = build_positional_postings(doc_terms).withColumn(
-            "bucket", F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int")
+            "bucket", term_bucket_col(num_buckets)
         )
-        pos_path = os.path.join(out_dir, "positional")
-        pos.write.mode("overwrite").partitionBy("bucket").parquet(pos_path)
-        append_metrics(
-            "positional", _partition_metrics(spark.read.parquet(pos_path))
-        )
-        mark_stage("positional")
+        mark_stage("positional",
+                   publish(pos, path("positional"), "bucket"))
 
     # Everything after `flat` is an independent Spark job chain over
     # either the flat checkpoint or the raw docs — run the pending ones
@@ -362,8 +415,6 @@ def load_index(spark: SparkSession, out_dir: str) -> IndexTables:
 def invalidate_buckets(out_dir: str, buckets: list) -> None:
     """Testing/maintenance hook: mark buckets as not-done so the next
     build re-encodes them (simulates a mid-build crash)."""
-    import shutil
-
     man = _load_manifest(out_dir)
     man["buckets_done"] = [b for b in man["buckets_done"] if b not in buckets]
     if "blocked" in man["stages"]:
@@ -372,4 +423,4 @@ def invalidate_buckets(out_dir: str, buckets: list) -> None:
         p = os.path.join(out_dir, "postings", f"bucket={b}")
         if os.path.isdir(p):
             shutil.rmtree(p)
-    _save_manifest(out_dir, man)
+    write_json(_manifest_path(out_dir), man)

@@ -38,11 +38,20 @@ from pyspark.sql import functions as F
 
 from .build import IndexTables, build_blocked_postings
 from .checkpoint import (
-    _append_metrics,
+    STAGED,
     _load_manifest,
-    _save_manifest,
+    _manifest_path,
+    _stage,
+    _swap,
     load_index,
+    log_lineage,
+    publish,
+    restore_staged,
+    validate_index_dir,
+    write_json,
 )
+from .codec import BLOCK_FORMAT, CODECS
+from .xxh64 import term_bucket_col
 
 _TOMB = "tombstones"
 
@@ -108,35 +117,45 @@ def load_index_live(spark: SparkSession, out_dir: str) -> IndexTables:
     )
 
 
-def _rewrite_buckets(spark: SparkSession, root: str, affected: list,
-                     tomb: DataFrame | None) -> None:
-    """Rewrite the affected bucket=NN partitions of ``root`` in ONE
-    Spark job: filter + anti-join + write to a staging dir partitioned
-    by bucket, then swap the partition dirs driver-side (metadata-only
-    moves). A serial per-bucket loop schedules one job per bucket —
-    fine at 64 buckets, hostile at the thousands a 10^12-doc table
-    carries. A bucket whose rows are ALL tombstoned produces no staging
-    partition and its stale dir is simply removed."""
+def _rewrite_buckets(spark: SparkSession, root: str,
+                     tomb: DataFrame | None) -> list:
+    """Rewrite the bucket=NN partitions of ``root`` that hold tombstoned
+    rows (every bucket when there are no tombstones: pure small-file
+    compaction) in ONE Spark job: filter + anti-join + write to the
+    staged dir partitioned by bucket, then swap the partition dirs
+    driver-side (metadata-only moves). A serial per-bucket loop
+    schedules one job per bucket — fine at 64 buckets, hostile at the
+    thousands a 10^12-doc table carries. A bucket whose rows are ALL
+    tombstoned produces no staged partition and its stale dir is simply
+    removed. Returns the staged write's lineage."""
+    table = spark.read.parquet(root)
+    if tomb is not None:
+        affected = sorted(
+            r["bucket"] for r in table
+            .join(F.broadcast(tomb), "doc_id", "left_semi")
+            .select("bucket").distinct().collect()
+        )
+    else:
+        affected = sorted(
+            int(d.split("=", 1)[1])
+            for d in os.listdir(root) if d.startswith("bucket=")
+        )
     if not affected:
-        return
-    kept = spark.read.parquet(root).filter(F.col("bucket").isin(affected))
+        return []
+    kept = table.filter(F.col("bucket").isin(affected))
     if tomb is not None:
         kept = kept.join(F.broadcast(tomb), "doc_id", "left_anti")
-    staging = root + ".compact.tmp"
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)
-    (
-        kept.repartition("bucket")          # ~one output file per bucket
-        .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-    )
+    # ~one output file per bucket
+    lineage = _stage(kept.repartition("bucket"), root, "bucket")
     for b in affected:
         dst = os.path.join(root, f"bucket={b}")
-        src = os.path.join(staging, f"bucket={b}")
+        src = os.path.join(root + STAGED, f"bucket={b}")
         if os.path.isdir(dst):
             shutil.rmtree(dst)
         if os.path.isdir(src):
             os.replace(src, dst)
-    shutil.rmtree(staging)
+    shutil.rmtree(root + STAGED)
+    return lineage
 
 
 def compact_index(spark: SparkSession, out_dir: str,
@@ -157,7 +176,6 @@ def compact_index(spark: SparkSession, out_dir: str,
     VERDICT r1 correctly flagged stale bounds as a pruning-soundness
     hazard). Also serves as plain small-file compaction when there are
     no tombstones (each bucket rewritten to one file)."""
-    from .codec import CODECS
     if codec not in CODECS:
         raise ValueError(f"unknown codec {codec!r}; choose from {CODECS}")
     # in-progress sentinel: every rewrite below is idempotent while the
@@ -170,26 +188,17 @@ def compact_index(spark: SparkSession, out_dir: str,
     sentinel = os.path.join(out_dir, "_COMPACTING")
     with open(sentinel, "w") as f:
         f.write("1")
+    # finish any swap a previous crashed compact left half done BEFORE
+    # anything reads the tables: a bucket or table it removed but never
+    # replaced is otherwise invisible to this run (its tombstoned rows
+    # are gone, so nothing rewrites it) and lost for good
+    restore_staged(out_dir)
     with open(os.path.join(out_dir, "stats.json")) as f:
         stats = json.load(f)
     salt_ranges = stats.get("salt_ranges", 8)
     num_buckets = stats.get("num_buckets", 64)
 
     tomb = tombstones(spark, out_dir)
-    flat_root = os.path.join(out_dir, "postings_flat")
-    flat_all = spark.read.parquet(flat_root)
-
-    # restore any doc table a previous crashed compact left parked as
-    # <stage>.compact.tmp BEFORE anything reads those tables — the
-    # zero-survivor guard below reads docmap, so running the restore
-    # after it (as the rewrite loop used to) broke the "re-run compact
-    # repairs any crash" contract for a crash in docmap's swap window
-    for name in ("docmap", "doc_len", "doc_vectors", "docs"):
-        p = os.path.join(out_dir, name)
-        tmp = p + ".compact.tmp"
-        if not os.path.isdir(p) and os.path.isdir(tmp):
-            os.replace(tmp, p)
-
     if tomb is not None:
         # refuse to compact down to NOTHING before touching any table: a
         # zero-survivor index has no readable stages (empty parquet dirs
@@ -208,155 +217,90 @@ def compact_index(spark: SparkSession, out_dir: str,
                 "an empty index — remove the index directory instead"
             )
 
-    def _rw_flat() -> None:
-        if tomb is not None:
-            # bucket-pruned rewrite: only buckets holding tombstoned rows
-            affected = sorted(
-                r["bucket"]
-                for r in flat_all
-                .join(F.broadcast(tomb), "doc_id", "left_semi")
-                .select("bucket").distinct().collect()
-            )
-        else:
-            # pure small-file compaction: every bucket → one file
-            affected = sorted(
-                int(d.split("=", 1)[1])
-                for d in os.listdir(flat_root)
-                if d.startswith("bucket=")
-            )
-        _rewrite_buckets(spark, flat_root, affected, tomb)
-        _append_metrics(
-            spark, out_dir, "compact_flat",
-            spark.createDataFrame(
-                [(b, 1) for b in affected] or [(-1, 0)],
-                "partition_id int, rows long",
-            ),
-        )
-
-    pos_root = os.path.join(out_dir, "positional")
-
-    def _rw_positional() -> None:
-        # positional stage (if built): same bucket-pruned rewrite
-        if tomb is not None:
-            pos_affected = sorted(
-                r["bucket"]
-                for r in spark.read.parquet(pos_root)
-                .join(F.broadcast(tomb), "doc_id", "left_semi")
-                .select("bucket").distinct().collect()
-            )
-        else:
-            pos_affected = sorted(
-                int(d.split("=", 1)[1])
-                for d in os.listdir(pos_root)
-                if d.startswith("bucket=")
-            )
-        _rewrite_buckets(spark, pos_root, pos_affected, tomb)
-
-    def _rw_doc_table(name: str) -> None:
+    def _rw_doc_table(name: str) -> list:
         p = os.path.join(out_dir, name)
-        tmp = p + ".compact.tmp"
-        # crash recovery (a previous run dying between rmtree(p) and
-        # os.replace(tmp, p)) already ran above, before the
-        # zero-survivor guard's docmap read
-        if name in ("doc_vectors", "docs") and not os.path.isdir(p):
-            return  # optional stages, never published
+        if not os.path.isdir(p):
+            return []  # optional stages, never published
         kept = spark.read.parquet(p).join(
             F.broadcast(tomb), "doc_id", "left_anti"
         ).sort("doc_id")  # keep the publish-time doc_id sort
-        kept.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(p)
-        os.replace(tmp, p)
+        return publish(kept, p)
 
     # The flat rewrite, positional rewrite, and each doc-table rewrite
     # touch disjoint directories and disjoint Spark inputs — run them as
     # concurrent jobs instead of six serial ones (same per-table swap
     # atomicity; the _COMPACTING sentinel already fences readers for the
     # whole window, so intermediate orderings are unobservable).
-    rewrites = [_rw_flat]
+    flat_root = os.path.join(out_dir, "postings_flat")
+    pos_root = os.path.join(out_dir, "positional")
+    rewrites = [partial(_rewrite_buckets, spark, flat_root, tomb)]
     if os.path.isdir(pos_root):
-        rewrites.append(_rw_positional)
+        rewrites.append(partial(_rewrite_buckets, spark, pos_root, tomb))
     if tomb is not None:
         for name in ("docmap", "doc_len", "doc_vectors", "docs"):
             rewrites.append(partial(_rw_doc_table, name))
-    if len(rewrites) == 1:
-        rewrites[0]()
-    else:
-        with ThreadPoolExecutor(max_workers=len(rewrites)) as pool:
-            for fut in [pool.submit(fn) for fn in rewrites]:
-                fut.result()
+    with ThreadPoolExecutor(max_workers=len(rewrites)) as pool:
+        lineage = [
+            r for fut in [pool.submit(fn) for fn in rewrites]
+            for r in fut.result()
+        ]
 
     flat = spark.read.parquet(flat_root).drop("bucket")
 
-    def _refresh_vocab() -> None:
+    def _refresh_vocab() -> list:
         vocab = flat.groupBy("term").agg(
             F.count("*").alias("df"), F.sum("tf").alias("cf")
         )
-        vp = os.path.join(out_dir, "vocab")
-        tmpv = vp + ".compact.tmp"
-        vocab.write.mode("overwrite").parquet(tmpv)
-        if os.path.isdir(vp):
-            shutil.rmtree(vp)
-        os.replace(tmpv, vp)
+        return publish(vocab, os.path.join(out_dir, "vocab"))
 
     # vocab refresh is independent of the blocked re-encode below (which
     # only needs the refreshed stats) — overlap it with the long pole;
-    # the future is joined before the tombstones/sentinel are cleared,
-    # and a vocab failure (sentinel left in place) is repaired by simply
-    # re-running compact, same as every other partial state
-    vocab_pool = ThreadPoolExecutor(max_workers=1)
-    vocab_fut = vocab_pool.submit(_refresh_vocab)
+    # the pool is joined before the tombstones/sentinel are cleared (and
+    # before a failure propagates), and a vocab failure (sentinel left in
+    # place) is repaired by simply re-running compact, same as every
+    # other partial state
+    with ThreadPoolExecutor(max_workers=1) as vocab_pool:
+        vocab_fut = vocab_pool.submit(_refresh_vocab)
 
-    agg = spark.read.parquet(os.path.join(out_dir, "doc_len")).agg(
-        F.count("*").alias("n"), F.avg("dl").alias("avgdl")
-    ).head()
-    stats["n_docs"] = int(agg["n"] or 0)
-    stats["avgdl"] = float(agg["avgdl"] or 0.0)
-    # compact re-encodes every block with this version's writer
-    from .codec import BLOCK_FORMAT
-    stats["block_format"] = BLOCK_FORMAT
+        agg = spark.read.parquet(os.path.join(out_dir, "doc_len")).agg(
+            F.count("*").alias("n"), F.avg("dl").alias("avgdl")
+        ).head()
+        stats["n_docs"] = int(agg["n"] or 0)
+        stats["avgdl"] = float(agg["avgdl"] or 0.0)
+        # compact re-encodes every block with this version's writer
+        stats["block_format"] = BLOCK_FORMAT
 
-    # blocked re-encode (global: max_score embeds the refreshed stats).
-    # Crash-atomicity: the refreshed stats and the re-encoded blocked
-    # table must land TOGETHER (block max_score embeds n_docs/avgdl —
-    # mixing old blocks with new stats under-estimates WAND bounds).
-    # Both sides are stamped with one generation id: blocked dir gets a
-    # _GENERATION marker (underscore-prefixed → invisible to the parquet
-    # reader), stats.json gets the same value, and stats.json is written
-    # ONLY AFTER the postings swap. load_index cross-checks the two and
-    # refuses a torn pair (the fix is simply re-running compact).
-    generation = uuid.uuid4().hex
-    stats["generation"] = generation
-    blocked = build_blocked_postings(
-        flat, stats["n_docs"], stats["avgdl"], salt_ranges=salt_ranges,
-        num_buckets=num_buckets, codec=codec,
-    )
-    bp = os.path.join(out_dir, "postings")
-    tmpb = bp + ".compact.tmp"
-    blocked.write.mode("overwrite").partitionBy("bucket").parquet(tmpb)
-    with open(os.path.join(tmpb, "_GENERATION"), "w") as f:
-        f.write(generation)
-    old_bp = bp + ".compact.old"
-    if os.path.isdir(old_bp):
-        shutil.rmtree(old_bp)
-    if os.path.isdir(bp):
-        os.rename(bp, old_bp)
-    os.rename(tmpb, bp)
-    sp = os.path.join(out_dir, "stats.json")
-    with open(sp + ".tmp", "w") as f:
-        json.dump(stats, f)
-    os.replace(sp + ".tmp", sp)          # atomic: stats+blocked now agree
-    if os.path.isdir(old_bp):
-        shutil.rmtree(old_bp)
-    try:
-        vocab_fut.result()
-    finally:
-        vocab_pool.shutdown(wait=True)
+        # blocked re-encode (global: max_score embeds the refreshed
+        # stats). Crash-atomicity: the refreshed stats and the
+        # re-encoded blocked table must land TOGETHER (block max_score
+        # embeds n_docs/avgdl — mixing old blocks with new stats
+        # under-estimates WAND bounds). Both sides are stamped with one
+        # generation id: the staged blocked dir gets a _GENERATION marker
+        # (underscore-prefixed → invisible to the parquet reader) before
+        # its swap, stats.json gets the same value, and stats.json is
+        # written ONLY AFTER the swap. load_index cross-checks the two
+        # and refuses a torn pair; the _COMPACTING sentinel fences the
+        # swap window itself (the fix for either is re-running compact).
+        generation = uuid.uuid4().hex
+        stats["generation"] = generation
+        blocked = build_blocked_postings(
+            flat, stats["n_docs"], stats["avgdl"], salt_ranges=salt_ranges,
+            num_buckets=num_buckets, codec=codec,
+        )
+        bp = os.path.join(out_dir, "postings")
+        lineage += _stage(blocked, bp, "bucket")
+        with open(os.path.join(bp + STAGED, "_GENERATION"), "w") as f:
+            f.write(generation)
+        _swap(bp)
+        write_json(os.path.join(out_dir, "stats.json"), stats)
+        lineage += vocab_fut.result()
 
     man = _load_manifest(out_dir)
     man["buckets_done"] = sorted(range(num_buckets))
     if "blocked" not in man["stages"]:
         man["stages"].append("blocked")
-    _save_manifest(out_dir, man)
+    write_json(_manifest_path(out_dir), man)
+    log_lineage(out_dir, "compact", lineage)
 
     if tomb is not None:
         shutil.rmtree(_tomb_path(out_dir))
@@ -386,8 +330,6 @@ def merge_indexes(
     Inputs with pending tombstones are refused: merging their raw
     postings would resurrect deleted docs — compact them first.
     """
-    from .checkpoint import validate_index_dir
-
     if not input_dirs:
         raise ValueError("merge needs at least one input index")
     all_stats = []
@@ -416,9 +358,8 @@ def merge_indexes(
             shutil.rmtree(p)
         elif os.path.exists(p):
             os.remove(p)
-        tmp = p + ".compact.tmp"
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
+        if os.path.isdir(p + STAGED):
+            shutil.rmtree(p + STAGED)
     num_buckets = all_stats[0].get("num_buckets", 64)
     salt_ranges = all_stats[0].get("salt_ranges", 8)
 
@@ -459,65 +400,37 @@ def merge_indexes(
             out = out.unionByName(shifted(sub, i))
         return out
 
-    flat = union_stage("postings_flat").drop("bucket").withColumn(
-        "bucket", F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int")
-    )
-    flat.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(out_dir, "postings_flat")
-    )
-    union_stage("docmap").sort("doc_id").write.mode("overwrite").parquet(
-        os.path.join(out_dir, "docmap")
-    )
-    union_stage("doc_len").sort("doc_id").write.mode("overwrite").parquet(
-        os.path.join(out_dir, "doc_len")
-    )
-    stages = ["flat", "blocked"]
-    for sub in ("docs", "doc_vectors"):
-        if all(
-            os.path.isdir(os.path.join(input_dirs[i], sub)) for i in live
-        ):
-            union_stage(sub).sort("doc_id").write.mode("overwrite").parquet(
-                os.path.join(out_dir, sub)
+    optional = [
+        sub for sub in ("docs", "doc_vectors", "positional")
+        if all(os.path.isdir(os.path.join(input_dirs[i], sub)) for i in live)
+    ]
+    lineage = []
+    for sub in ("postings_flat", "docmap", "doc_len", *optional):
+        df = union_stage(sub)
+        if sub in ("postings_flat", "positional"):
+            # re-bucket: the inputs may use a different bucket count
+            lineage += publish(
+                df.drop("bucket").withColumn(
+                    "bucket", term_bucket_col(num_buckets)
+                ),
+                os.path.join(out_dir, sub), "bucket",
             )
-            stages.append(sub)
-    if all(
-        os.path.isdir(os.path.join(input_dirs[i], "positional")) for i in live
-    ):
-        pos = union_stage("positional").drop("bucket").withColumn(
-            "bucket", F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int")
-        )
-        pos.write.mode("overwrite").partitionBy("bucket").parquet(
-            os.path.join(out_dir, "positional")
-        )
-        stages.append("positional")
+        else:
+            lineage += publish(df.sort("doc_id"), os.path.join(out_dir, sub))
 
-    import json as _json
-
-    from .codec import BLOCK_FORMAT
-
-    with open(os.path.join(out_dir, "stats.json"), "w") as f:
-        _json.dump(
-            {
-                "n_docs": off,
-                "avgdl": 0.0,  # recomputed by compact_index below
-                "salt_ranges": salt_ranges,
-                "num_buckets": num_buckets,
-                "block_format": BLOCK_FORMAT,
-                "merged_from": list(input_dirs),
-            },
-            f,
-        )
-    _save_manifest(
-        out_dir,
-        {"stages": stages, "buckets_done": sorted(range(num_buckets))},
-    )
-    _append_metrics(
-        spark, out_dir, "merge",
-        spark.createDataFrame(
-            [(i, int(s["n_docs"])) for i, s in enumerate(all_stats)],
-            "partition_id int, rows long",
-        ),
-    )
+    write_json(os.path.join(out_dir, "stats.json"), {
+        "n_docs": off,
+        "avgdl": 0.0,  # recomputed by compact_index below
+        "salt_ranges": salt_ranges,
+        "num_buckets": num_buckets,
+        "block_format": BLOCK_FORMAT,
+        "merged_from": list(input_dirs),
+    })
+    write_json(_manifest_path(out_dir), {
+        "stages": ["flat", "blocked", *optional],
+        "buckets_done": sorted(range(num_buckets)),
+    })
+    log_lineage(out_dir, "merge", lineage)
     # one global finish pass: vocab, n_docs/avgdl, blocked re-encode with
     # generation stamping — identical machinery to a post-delete compact
     return compact_index(spark, out_dir, codec=codec)

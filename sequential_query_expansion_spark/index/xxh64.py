@@ -1,10 +1,9 @@
 """Pure-Python XXH64 matching Spark's ``F.xxhash64`` on string columns.
 
 The blocked postings and positional postings are written partitioned by
-``bucket = pmod(xxhash64(term), num_buckets)`` (index/build.py:340,
-checkpoint.py:121). A client that wants to read ONE term's postings
-without Spark (scoring/local.py, the serving tier) must recompute that
-bucket exactly: Spark's XxHash64 expression is standard XXH64 with seed
+``bucket = pmod(xxhash64(term), num_buckets)`` (``term_bucket_col``
+below). A client that wants to read ONE term's postings without Spark
+(scoring/local.py, the serving tier) must recompute that bucket exactly: Spark's XxHash64 expression is standard XXH64 with seed
 42 over the column's UTF-8 bytes, so a faithful reimplementation lets
 the reader prune 63 of 64 bucket directories before touching parquet.
 
@@ -91,3 +90,11 @@ def spark_xxhash64(s: str, seed: int = SPARK_SEED) -> int:
 def term_bucket(term: str, num_buckets: int) -> int:
     """``pmod(xxhash64(term), num_buckets)`` — the build's bucket id."""
     return spark_xxhash64(term) % num_buckets
+
+
+def term_bucket_col(num_buckets: int):
+    """Spark Column twin of ``term_bucket`` over the ``term`` column —
+    the one expression every bucketed table is partitioned by."""
+    from pyspark.sql import functions as F
+
+    return F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int")

@@ -95,10 +95,19 @@ def pack_sequences(
         raise ValueError(f"capacity must be >= 1, got {capacity}")
     d = docs.select(id_col, tokens_col).repartitionByRange(F.col(id_col))
     d = d.withColumn("_pid", F.spark_partition_id()).localCheckpoint()
-    psums = {
-        r["_pid"]: r["s"]
-        for r in d.groupBy("_pid").agg(F.sum(tokens_col).alias("s")).collect()
-    }
+    # NULL token counts have no offset to give: count them in the same
+    # pass as the partition sums and refuse them before any output
+    rows = d.groupBy("_pid").agg(
+        F.sum(tokens_col).alias("s"),
+        F.count_if(F.col(tokens_col).isNull()).alias("n_null"),
+    ).collect()
+    n_null = sum(r["n_null"] for r in rows)
+    if n_null:
+        raise ValueError(
+            f"{n_null} row(s) have a NULL {tokens_col!r}; fill or drop "
+            "them before packing"
+        )
+    psums = {r["_pid"]: r["s"] for r in rows}
     offsets, acc = [], 0
     for pid in sorted(psums):  # range partitions ascend with pid
         offsets.append((pid, acc))

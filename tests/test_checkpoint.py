@@ -85,3 +85,52 @@ def test_loaded_index_queries(spark, docs_df, tmp_path_factory, tiny_corpus):
     qdf = spark.createDataFrame(tiny_corpus.queries)
     res = score_topk(idx, query_term_table(qdf), k=5)
     assert res.count() > 0
+
+
+@pytest.fixture(scope="module")
+def dv_build(spark, docs_df, tmp_path_factory):
+    """(out_dir, Spark jobs run) of one build with doc vectors; the job
+    window is taken as perfbench/spans.py takes it, after the cache of
+    ``docs_df`` is materialized."""
+    docs_df.count()
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    out = str(tmp_path_factory.mktemp("idx_dv"))
+    lo = dag.nextJobId()
+    cp.build_index_checkpointed(spark, docs_df, out, num_buckets=8,
+                                with_doc_vectors=True)
+    return out, dag.nextJobId() - lo
+
+
+def test_build_lineage_rows_are_true(spark, dv_build):
+    """Lineage comes from the written files' footers: per stage and
+    table the rows sum to the table's row count, and a bucketed table's
+    rows per partition_id are its rows per bucket."""
+    import pyarrow.parquet as pq
+
+    out, _ = dv_build
+    m = pq.read_table(os.path.join(out, "build_metrics")).to_pandas()
+    assert set(m.columns) == {"stage", "table", "partition_id", "rows",
+                              "wall_ms", "ts"}
+    expected = {("flat", "postings_flat"), ("flat", "docmap"),
+                ("flat", "doc_len"), ("flat", "vocab"),
+                ("blocked", "postings"), ("doc_vectors", "doc_vectors")}
+    assert set(zip(m.stage, m.table)) == expected
+    for stage, table in expected:
+        got = m[(m.stage == stage) & (m.table == table)]
+        df = spark.read.parquet(os.path.join(out, table))
+        assert got.rows.sum() == df.count(), (stage, table)
+        if table in ("postings_flat", "postings"):
+            per_bucket = {
+                r["bucket"]: r["count"]
+                for r in df.groupBy("bucket").count().collect()
+            }
+            assert dict(zip(got.partition_id, got.rows)) == per_bucket
+
+
+def test_build_job_count(dv_build):
+    """Pins the Spark jobs of a checkpointed build on the 300-doc
+    fixture. Lineage read from file footers costs none: each stage used
+    to add three (schema-inference read, groupBy count, append write),
+    so the same build ran 33 jobs when flat, blocked and doc_vectors
+    re-read their tables."""
+    assert dv_build[1] == 24

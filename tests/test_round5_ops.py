@@ -283,6 +283,14 @@ class TestPiiScan:
         assert row["n_email"] == 1 and row["n_ipv4"] == 1
         assert row["redacted"] == "x [EMAIL] y"
 
+    def test_email_with_ip_host_fully_redacted(self, spark):
+        # a dotted-quad mail host has no alphabetic TLD; the email pass
+        # must still take the whole address, not leave "user@" behind
+        # for the ipv4 pass to half-mask
+        (row,) = pii.pii_scan(_docs(spark, ["x user@1.2.3.4 y"])).collect()
+        assert row["n_email"] == 1 and row["n_ipv4"] == 1
+        assert row["redacted"] == "x [EMAIL] y"
+
     def test_boundaries_hold(self, spark):
         # digits glued to letters are not phones/IPs (\b), and a bare
         # domain without '@' is not an email
@@ -373,6 +381,16 @@ class TestPackSequences:
             training_prep.pack_sequences(
                 spark.createDataFrame([(1, 1)], "doc_id long, n_tokens long"), 0
             )
+
+    def test_rejects_null_token_counts(self, spark):
+        # a NULL count has no offset: refuse it up front, naming how
+        # many rows carry one, instead of crashing or shifting nothing
+        df = spark.createDataFrame(
+            [(1, 5), (2, None), (3, 4), (4, None)],
+            "doc_id long, n_tokens long",
+        )
+        with pytest.raises(ValueError, match="2 row"):
+            training_prep.pack_sequences(df, capacity=8)
 
     def test_duplicate_ids_get_distinct_offsets(self, spark):
         # ROWS frame: id-peers must receive distinct telescoping offsets,
