@@ -276,8 +276,8 @@ def build_blocked_postings(
         .withColumn("salt", (F.col("doc_id") / F.lit(range_size)).cast("int"))
     )
 
-    def encode_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
+    def encode_segment(pdf: pd.DataFrame) -> dict:
+        # one (term, salt) group, rows already in doc_id order
         term = pdf["term"].iloc[0]
         salt = int(pdf["salt"].iloc[0])
         df_g = int(pdf["df_g"].iloc[0])
@@ -303,20 +303,51 @@ def build_blocked_postings(
                     "dls": dls_b,
                 }
             )
-        return pd.DataFrame(
-            [
-                {
-                    "term": term,
-                    "salt": salt,
-                    "df_part": int(len(doc_ids)),
-                    "cf_part": int(tfs.sum()),
-                    "blocks": blocks,
-                }
-            ]
-        )
+        return {
+            "term": term,
+            "salt": salt,
+            "df_part": int(len(doc_ids)),
+            "cf_part": int(tfs.sum()),
+            "blocks": blocks,
+        }
 
-    segments = with_salt.groupBy("term", "salt").applyInPandas(
-        encode_segment, schema=_SEGMENT_SCHEMA
+    def encode_partition(batches):
+        # Rows arrive sorted by (term, salt, doc_id). A batch is cut at
+        # its group starts; the last group may continue into the next
+        # batch, so its pieces wait in ``tail`` until a new key shows.
+        # One pass per partition instead of applyInPandas' per-group
+        # Arrow round trip, which dominated small-corpus builds.
+        tail, tail_key = [], None
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            terms = pdf["term"].to_numpy(object)
+            salts = pdf["salt"].to_numpy(np.int64)
+            new = np.empty(len(pdf), dtype=bool)
+            new[0] = (terms[0], salts[0]) != tail_key
+            new[1:] = (terms[1:] != terms[:-1]) | (salts[1:] != salts[:-1])
+            starts = np.flatnonzero(new)
+            if len(starts) == 0:
+                tail.append(pdf)
+                continue
+            rows = []
+            if tail:
+                tail.append(pdf.iloc[: starts[0]])
+                rows.append(encode_segment(pd.concat(tail)))
+            for a, b in zip(starts[:-1], starts[1:]):
+                rows.append(encode_segment(pdf.iloc[a:b]))
+            tail = [pdf.iloc[starts[-1]:]]
+            tail_key = (terms[-1], salts[-1])
+            if rows:
+                yield pd.DataFrame(rows, columns=_SEGMENT_SCHEMA.fieldNames())
+        if tail:
+            yield pd.DataFrame([encode_segment(pd.concat(tail))],
+                               columns=_SEGMENT_SCHEMA.fieldNames())
+
+    segments = (
+        with_salt.repartition("term", "salt")
+        .sortWithinPartitions("term", "salt", "doc_id")
+        .mapInPandas(encode_partition, schema=_SEGMENT_SCHEMA)
     )
 
     # Phase 2: tiny groups (≤ salt_ranges rows per term) — no skew possible.
